@@ -1,40 +1,29 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark harness (driver contract: ONE JSON line on stdout).
   *
-  * Protocol, reworked in r11 for contamination-resistance (BENCH_r10
-  * recorded 124 s on a contended box for a binary that re-measures at
-  * 63 s — per-query medians of 3 CONSECUTIVE samples inherit any
-  * transient load spike in full):
+  * Every sample is the caller path: `SparkEntry.queries(name)(spark,
+  * sfDir)` on the default [[graft.engine.Graft.session]], then a full
+  * drain of the result. Each sample therefore pays the builder, analysis,
+  * optimization, physical planning + codegen and every execution stage,
+  * exactly as a caller does; only what the session itself caches
+  * (relation metadata, generated classes) carries across samples.
+  * Rebuilding per sample also keeps builders that run jobs at
+  * construction (p22's connected components, p28's BPE rounds) or carry
+  * a lazy localCheckpoint honest: no sample reads blocks an earlier one
+  * materialized.
   *
-  *   - INTERLEAVED passes: pass 0 warms every query once (plan + JIT +
-  *     shuffle paths), then 3 full-suite passes each time every query
-  *     once. The reported per-query number is the median ACROSS passes,
-  *     so a contended window poisons at most one pass, not one query's
-  *     entire sample set. Self-identification: the JSON carries
-  *     /proc load averages and this process's CPU time, so a run taken
-  *     under external load is visible as load >> used cores.
-  *   - ADAPTIVE tiered path ([[graft.engine.Adaptive]]): pass 1 runs
-  *     size-gated queries under their tier's tuned confs (small →
-  *     no-AQE fast confs; medium → AQE with input-sized partitions),
-  *     pass 2 under the AQE default, pass 3 under whichever measured
-  *     faster (tuned must win by ≥5% — a tie margin so one contended
-  *     sample can't misroute the pass) — the engine analog of the
-  *     reference's history-based session tuning. The median over the
-  *     three passes then reflects the winning config (two of three
-  *     samples) without ever trusting a prediction.
-  *   - Prepared-statement reuse: the query is parsed, analyzed, and
-  *     OPTIMIZED once per conf regime (the engine analog of
-  *     PREPARE/EXECUTE — the reference serves repeated query shapes
-  *     the same way); each pass then re-runs physical planning,
-  *     codegen, fresh shuffles/broadcasts, and every execution stage
-  *     from that optimized plan (see
-  *     [[org.apache.spark.sql.graft.PlanExec.ofPreOptimized]] —
-  *     Dataset reuse would skip the map stages entirely). p10/p15
-  *     embed a sink write in the query body, so they rebuild from
-  *     scratch every pass to re-execute the write.
+  * Passes are INTERLEAVED (r11, contamination resistance: BENCH_r10
+  * recorded 124 s on a contended box for a binary that re-measures at
+  * 63 s). Pass 0 warms every query once (JIT, codegen, shuffle paths),
+  * then 3 full-suite passes each time every query once. The reported
+  * per-query number is the median ACROSS passes, so a contended window
+  * poisons at most one pass, not one query's entire sample set. The
+  * JSON carries /proc load averages, this process's CPU time and the
+  * window verdict ([[adjudicate]]), so a run taken under external load
+  * is visible as such.
   *
   * Results are materialized by fully iterating the executed plan:
   * every operator runs and every output row is produced, with no
@@ -48,36 +37,66 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   private val Passes = 3
 
-  /** Queries whose body performs a sink write that must re-run per
-    * sample (the write IS the measured operator). */
-  // p22: connectedComponents materializes eagerly (localCheckpoint per
-  // propagation round) at DataFrame-CONSTRUCTION time, so a cached
-  // build would leave the whole CC loop outside the timer — rebuild
-  // per sample to time the real work. Same reasoning (r20): p28's four
-  // BPE pair-count rounds run at construction; the comparator SQL does
-  // that work per execution, so a cached build would fabricate the
-  // ratio. (p27 left this set in r21: its sizing count() and driver
-  // bloom build became a bloom_filter_agg SCALAR SUBQUERY inside the
-  // query plan, so construction runs no jobs and the prepared-plan
-  // protocol re-executes the filter build per sample like any stage.)
-  // r20b INVARIANT: every query carrying a localCheckpoint must be in
-  // this set — a lazy checkpoint materializes on the WARM pass and
-  // every timed sample then reads the cached census blocks instead of
-  // re-running the big-table work behind it (the same fabricated-ratio
-  // mechanism, one action later). Rebuilding constructs a fresh
-  // un-materialized checkpoint per sample, so each sample pays the
-  // full computation exactly like the comparator does. This rule
-  // exposed an inherited measurement bug: f6's r20 checkpoint silently
-  // moved its quantile census out of the timer (0.24 s cached vs
-  // 0.78 s honest) — and once timed honestly the checkpoint LOST to
-  // the plain diamond (0.48 s), so f6's checkpoint was reverted rather
-  // than special-cased here.
-  private val rebuildEachRun =
-    Set("p10_write_roundtrip", "p15_format_roundtrip", "p22_neardup_clusters",
-      "p28_bpe_merges")
-
   private def materialize(df: DataFrame): Unit =
     df.queryExecution.toRdd.foreachPartition(it => while (it.hasNext) it.next())
+
+  // Locale.ROOT: under comma-decimal default locales (de_DE etc.) the
+  // f-interpolator would emit "1,234" and break the JSON contract.
+  private def r3(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** Mechanical window verdict (r21, VERDICT #2). r20 discarded poisoned
+    * bench windows BY HAND (external load hitting only the parallel
+    * Spark passes while the single-threaded comparator ran clean, or
+    * vice versa) — a selection-bias surface. The run now judges its
+    * own window:
+    *   - `extP90`: 90th percentile of EXTERNAL cpu cores in use while
+    *     the Spark passes run;
+    *   - `duckDrift`: this window's comparator total over the
+    *     previously saved baseline's total, over the queries both hold
+    *     (an added or removed query cannot pass for drift). None unless
+    *     the comparator ran in THIS window (`duckNow`): a filtered run,
+    *     SPARK_GRAFT_NO_DUCK=1 or a failed comparator leaves only the
+    *     saved baseline, and dividing it by itself would read as a
+    *     passed check;
+    *   - `clean`: extP90 <= max(1.5, cpus/16) AND duckDrift within
+    *     [0.75, 1.33]. Without a drift the verdict rests on extP90
+    *     alone, and the JSON says so by omitting `duck_drift`. */
+  private[graft] final case class Window(extP90: Double, duckDrift: Option[Double],
+                                         clean: Boolean) {
+    def json: String = s""","ext_p90":${r3(extP90)}""" +
+      duckDrift.map(d => s""","duck_drift":${r3(d)}""").getOrElse("") +
+      s""","clean_window":$clean"""
+  }
+
+  private[graft] def adjudicate(extP90: Double, cpus: Int,
+                                duckNow: Option[Map[String, Double]],
+                                duckPrev: Map[String, Double]): Window = {
+    val duckDrift = duckNow.flatMap { now =>
+      val shared = (now.keySet & duckPrev.keySet).toSeq
+      val prevSum = shared.map(duckPrev).sum
+      if (shared.isEmpty || prevSum <= 0) None
+      else Some(shared.map(now).sum / prevSum)
+    }
+    Window(extP90, duckDrift, extP90 <= math.max(1.5, cpus / 16.0) &&
+      duckDrift.forall(d => d >= 0.75 && d <= 1.33))
+  }
+
+  /** A saved comparator baseline: the sf dir it was recorded for and
+    * its per-query DuckDB medians. None when absent or unreadable. */
+  private def readDuckBaseline(f: java.io.File): Option[(String, Map[String, Double])] =
+    if (!f.exists) None
+    else try {
+      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+      val it = node.get("queries").fields()
+      val b = Map.newBuilder[String, Double]
+      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asDouble() }
+      Some(node.get("sf").asText() -> b.result())
+    } catch {
+      case e: Exception =>
+        System.err.println(s"[bench] duck baseline ${f.getPath} unreadable: ${e.getMessage}")
+        None
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -99,22 +118,19 @@ object Bench {
       sys.exit(2)
     }
 
+    // Full-suite runs pair with a same-window comparator and write the
+    // ratio artifact; a filtered run does neither (its ratios would
+    // cover a subset, and the committed artifact holds the whole suite).
+    val runDuck = args.isEmpty && !sys.env.contains("SPARK_GRAFT_NO_DUCK") &&
+      new java.io.File("tools/duck_bench.py").exists
+    val duckFile = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_DUCK_JSON",
+      s"tools/duck_baseline_${new java.io.File(sfDir).getName}.json"))
     // Read the PRIOR comparator baseline before --save overwrites it:
-    // the adjudication block below computes this window's comparator
-    // drift against it (r21, VERDICT #2).
-    val duckPrev: Map[String, Double] = {
-      val f = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_DUCK_JSON",
-        s"tools/duck_baseline_${new java.io.File(sfDir).getName}.json"))
-      if (!f.exists) Map.empty
-      else try {
-        val q = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-          .get("queries")
-        val it = q.fields()
-        val b = Map.newBuilder[String, Double]
-        while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asDouble() }
-        b.result()
-      } catch { case _: Exception => Map.empty }
-    }
+    // the window verdict measures this window's comparator drift
+    // against it.
+    val duckPrev: Map[String, Double] =
+      if (runDuck) readDuckBaseline(duckFile).map(_._2).getOrElse(Map.empty)
+      else Map.empty
 
     // Same-window comparator pairing (r15 verdict Next #5): two rounds
     // were poisoned by host-load drift between the Spark bench and a
@@ -125,8 +141,7 @@ object Bench {
     // construction. The comparator's stdout is rerouted to stderr (the
     // driver contract is ONE JSON line on stdout); failures degrade to
     // the previously saved baseline. SPARK_GRAFT_NO_DUCK=1 skips.
-    if (args.isEmpty && !sys.env.contains("SPARK_GRAFT_NO_DUCK") &&
-        new java.io.File("tools/duck_bench.py").exists) {
+    val duckRan = runDuck && {
       try {
         val tmp = java.nio.file.Files.createTempDirectory("graft_duck")
         val om = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -150,40 +165,30 @@ object Bench {
         drain.setDaemon(true)
         drain.start()
         val done = proc.waitFor(15, java.util.concurrent.TimeUnit.MINUTES)
-        if (!done) { proc.destroyForcibly(); System.err.println("[bench] duck comparator timed out") }
-        else {
+        if (!done) {
+          proc.destroyForcibly()
+          System.err.println("[bench] duck comparator timed out")
+          false
+        } else {
           drain.join(10000)
           val outLines = outRef.get
           System.err.println(
             f"[bench] same-window duck comparator (rc=${proc.exitValue}, " +
               f"${(System.nanoTime() - t0) / 1e9}%.1f s): " + outLines.linesIterator
               .filter(_.startsWith("{")).mkString(" ").take(400))
+          proc.exitValue == 0
         }
       } catch {
         case e: Exception =>
           System.err.println(s"[bench] duck comparator unavailable (${e.getMessage}) " +
             "— falling back to the saved baseline")
+          false
       }
     }
 
-    // ---- mechanical window adjudication (r21, VERDICT #2) ----------
-    // r20 discarded poisoned bench windows BY HAND (external load
-    // hitting only the 32-way-parallel Spark passes while the
-    // single-threaded comparator ran clean, or vice versa) — a
-    // selection-bias surface. The run now measures its own window and
-    // emits a fixed, documented verdict:
-    //   - ext_p90: 90th percentile of EXTERNAL cpu cores in use while
-    //     the Spark passes run (system cpu load minus this process's,
-    //     sampled every 2 s from the OS bean — load1 can't separate
-    //     our own bursts from contention);
-    //   - duck_drift: this window's comparator total over the
-    //     previously SAVED baseline's total (intersected query set) —
-    //     catches a comparator-side-poisoned window;
-    //   - clean_window: ext_p90 <= max(1.5, cpus/16) AND duck_drift in
-    //     [0.75, 1.33] (drift test skipped when no prior baseline).
-    // The JSON still reports every number either way — the flag makes
-    // the keep/discard call mechanical and auditable instead of
-    // post-hoc.
+    // External load while the Spark passes run (system cpu load minus
+    // this process's, sampled every 2 s from the OS bean — load1 can't
+    // separate our own bursts from contention); see [[adjudicate]].
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     val hostCores = Runtime.getRuntime.availableProcessors()
@@ -200,104 +205,28 @@ object Bench {
     extSampler.setDaemon(true)
     extSampler.start() // covers warm + timed passes, not the comparator
 
-    import graft.engine.Adaptive
     val failed = scala.collection.mutable.ListBuffer[String]()
-    // name -> (tuned => fresh DataFrame, tuned confs if the size tier has them)
-    val prepared = scala.collection.mutable.LinkedHashMap[
-      String, (Boolean => DataFrame, Option[Seq[(String, String)]])]()
-
-    // pass 0: build + warm under default confs
-    for ((name, fn) <- selected) {
-      try {
-        val df = fn(spark, sfDir)
-        val bytes = Adaptive.inputBytes(df)
-        // Tiered tuning (r12): small inputs race the no-AQE fast confs,
-        // medium inputs (the 100-300 MB TPC-H scans) race the
-        // input-sized-partition medium confs, large inputs run default
-        // only — see Adaptive.tunedConfs.
-        val tunedConfs = Adaptive.tunedConfs(spark, bytes)
-        // Prepared-statement execution: parse/analyze/OPTIMIZE once per
-        // conf regime, then each sample re-runs physical planning,
-        // codegen, fresh shuffles/broadcasts, and every stage (see
-        // PlanExec.ofPreOptimized — Dataset reuse would skip the map
-        // stages entirely). Optimized plans are cached PER REGIME
-        // because optimizer-time decisions (runtime-filter injection)
-        // bake the active confs into the plan; executing a default-
-        // optimized plan under tuned confs would measure a hybrid
-        // neither path produces.
-        val build: Boolean => DataFrame =
-          if (rebuildEachRun(name)) _ => fn(spark, sfDir)
-          else {
-            val analyzed = df.queryExecution.analyzed
-            val optDefault = org.apache.spark.sql.graft.PlanExec
-              .ofRows(spark, analyzed).queryExecution.optimizedPlan
-            lazy val optTuned = Adaptive.withConfs(spark, tunedConfs.get)(
-              org.apache.spark.sql.graft.PlanExec
-                .ofRows(spark, analyzed).queryExecution.optimizedPlan)
-            tuned => org.apache.spark.sql.graft.PlanExec
-              .ofPreOptimized(spark, if (tuned) optTuned else optDefault)
-          }
-        materialize(build(false))
-        // Warm the tuned plan shape too (different physical plan →
-        // different codegen units): without this, the pass-1 tuned
-        // sample pays one-time Janino compilation and the tuned/default
-        // race is systematically biased toward default.
-        tunedConfs.foreach(c =>
-          Adaptive.withConfs(spark, c)(materialize(build(true))))
-        prepared += name -> (build, tunedConfs)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED (warm): ${e.getMessage}")
-          failed += name
-      }
-    }
-
     val samples = scala.collection.mutable.Map[String, Vector[Double]]()
       .withDefaultValue(Vector.empty)
-    val tunedWon = scala.collection.mutable.Set[String]()
 
-    def timeOne(build: Boolean => DataFrame,
-                confs: Option[Seq[(String, String)]]): Double = {
-      val t0 = System.nanoTime()
-      confs match {
-        case Some(c) => Adaptive.withConfs(spark, c)(materialize(build(true)))
-        case None    => materialize(build(false))
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    for (pass <- 1 to Passes; (name, (build, tunedConfs)) <- prepared) {
-      if (!failed.contains(name)) {
-        val useTuned = tunedConfs.isDefined && (pass match {
-          case 1 => true
-          case 2 => false
-          case _ => tunedWon(name)
-        })
-        try {
-          val t = timeOne(build, if (useTuned) tunedConfs else None)
-          samples(name) = samples(name) :+ t
-          // Pass-3 regime choice: tuned must beat default by >= 5%
-          // (one contended sample shouldn't misroute the pass — the
-          // single-sample comparison was r11's What's-wrong #4; the
-          // margin biases ties toward the default AQE path, which is
-          // also the only regime large queries ever see).
-          if (pass == 2 && tunedConfs.isDefined && samples(name)(0) < t * 0.95)
-            tunedWon += name
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED (pass $pass${if (useTuned) " tuned" else ""}): ${e.getMessage}")
-            failed += name
-            samples.remove(name)
-        }
+    // pass 0 warms; passes 1..Passes are timed
+    for (pass <- 0 to Passes; (name, fn) <- selected if !failed.contains(name)) {
+      try {
+        val t0 = System.nanoTime()
+        materialize(fn(spark, sfDir))
+        if (pass > 0) samples(name) = samples(name) :+ (System.nanoTime() - t0) / 1e9
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED (pass $pass): ${e.getMessage}")
+          failed += name
+          samples.remove(name)
       }
     }
 
-    val timed = prepared.keys.toSeq.filter(samples(_).nonEmpty).map { name =>
+    val timed = selected.map(_._1).filter(samples(_).nonEmpty).map { name =>
       val ss = samples(name)
       val med = ss.sorted.apply(ss.size / 2)
-      val tag = if (prepared(name)._2.isEmpty) ""
-        else if (tunedWon(name)) " [tuned]" else " [deflt]"
-      System.err.println(f"[bench] $name%-28s median=$med%.3fs samples=${ss.map(s => f"$s%.2f").mkString(",")}$tag")
+      System.err.println(f"[bench] $name%-28s median=$med%.3fs samples=${ss.map(s => f"$s%.2f").mkString(",")}")
       name -> med
     }
 
@@ -308,17 +237,12 @@ object Bench {
     // headline queries plus the composite pipelines individually, and
     // roll the rest up into per-family subtotals; full per-query detail
     // is on stderr above.
-    // Locale.ROOT: under comma-decimal default locales (de_DE etc.) the
-    // f-interpolator would emit "1,234" and break the JSON contract.
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val composites = Set("p9_corpus_pipeline", "x1_yoy_growth", "x2_market_basket")
-    val headline = timed.filter { case (k, _) =>
-      k.matches("q\\d+_.*") || composites(k)
-    }
+    def isHeadline(k: String): Boolean = k.matches("q\\d+_.*") || composites(k)
+    val headline = timed.filter { case (k, _) => isHeadline(k) }
     val family = "^([a-z]+).*".r
     val groups = timed
-      .filterNot { case (k, _) => k.matches("q\\d+_.*") || composites(k) }
+      .filterNot { case (k, _) => isHeadline(k) }
       .groupBy { case (k, _) => k match { case family(p) => p } }
       .toSeq.sortBy(_._1)
       .map { case (p, xs) => p -> xs.map(_._2).sum }
@@ -334,29 +258,13 @@ object Bench {
     // suite total is comfortably under it. Stale-baseline guard: the
     // recorded sf dir must equal this run's (regenerated testdata or a
     // different SF silently mismatching would fabricate ratios).
-    val duckTimes: Map[String, Double] = {
-      val path = sys.env.getOrElse("SPARK_GRAFT_DUCK_JSON",
-        s"tools/duck_baseline_${new java.io.File(sfDir).getName}.json")
-      val f = new java.io.File(path)
-      if (!f.exists) Map.empty
-      else try {
-        val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-        if (node.get("sf").asText() != sfDir) {
-          System.err.println(s"[bench] duck baseline $path is for " +
-            s"${node.get("sf").asText()}, not $sfDir — ratios omitted")
-          Map.empty
-        } else {
-          val q = node.get("queries")
-          val it = q.fields()
-          val b = Map.newBuilder[String, Double]
-          while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asDouble() }
-          b.result()
-        }
-      } catch {
-        case e: Exception =>
-          System.err.println(s"[bench] duck baseline unreadable: ${e.getMessage}")
-          Map.empty
-      }
+    val duckTimes: Map[String, Double] = readDuckBaseline(duckFile) match {
+      case Some((sf, times)) if sf == sfDir => times
+      case Some((sf, _)) =>
+        System.err.println(s"[bench] duck baseline ${duckFile.getPath} is for " +
+          s"$sf, not $sfDir — ratios omitted")
+        Map.empty
+      case None => Map.empty
     }
     val common = timed.filter { case (k, _) => duckTimes.contains(k) }
     val ratioOf: ((String, Double)) => (String, Double) = {
@@ -366,8 +274,9 @@ object Bench {
     // line is size-capped to the driver's 2000-char tail window, so
     // drift in a non-headline query (the q19 case) was invisible
     // without judge archaeology. Every paired query's spark/duck/ratio
-    // goes to a file artifact instead.
-    if (common.nonEmpty) {
+    // goes to a file artifact instead — on full-suite runs only, so a
+    // filtered run never truncates the committed artifact.
+    if (runDuck && common.nonEmpty) {
       val f = new java.io.File("tools/ratios_latest.json")
       val body = common.sortBy(x => -ratioOf(x)._2).map { case (k, v) =>
         s"""  "$k": {"spark": ${r3(v)}, "duck": ${r3(duckTimes(k))}, "ratio": ${r3(v / math.max(duckTimes(k), 1e-4))}}"""
@@ -390,10 +299,7 @@ object Bench {
     // needs a measurable baseline on both sides.
     val ratioWorst = common.filter(x => duckTimes(x._1) >= 0.05).map(ratioOf)
       .sortBy(-_._2).take(5)
-    val headlineRatios = common.filter { case (k, _) =>
-      k.matches("q\\d+_.*") || Set("p9_corpus_pipeline", "x1_yoy_growth",
-        "x2_market_basket")(k)
-    }.map(ratioOf)
+    val headlineRatios = common.filter { case (k, _) => isHeadline(k) }.map(ratioOf)
     def ratioJson: String = ratioTotal match {
       case None => ""
       case Some(rt) =>
@@ -405,28 +311,13 @@ object Bench {
     // load1 ~<= cpus used by this process alone.
     val load = f"${osBean.getSystemLoadAverage}%.1f"
     val cpuSec = r3(osBean.getProcessCpuTime / 1e9)
-    // window adjudication (see the sampler above for the rule)
     extSampler.interrupt()
-    val extSorted = {
-      val arr = extSamples.toArray(new Array[java.lang.Double](0))
-        .map(_.doubleValue).sorted
-      arr.toIndexedSeq
-    }
+    val extSorted = extSamples.toArray(new Array[java.lang.Double](0))
+      .map(_.doubleValue).sorted.toIndexedSeq
     val extP90 = if (extSorted.isEmpty) 0.0
       else extSorted(math.min(extSorted.size - 1, (extSorted.size * 9) / 10))
-    // drift over the INTERSECTED query set so an added/removed query
-    // can't masquerade as comparator drift
-    val duckDrift: Option[Double] = {
-      val shared = duckTimes.keySet & duckPrev.keySet
-      val prevSum = shared.toSeq.map(duckPrev).sum
-      if (shared.isEmpty || prevSum <= 0) None
-      else Some(shared.toSeq.map(duckTimes).sum / prevSum)
-    }
-    val cleanWindow = extP90 <= math.max(1.5, cpus / 16.0) &&
-      duckDrift.forall(d => d >= 0.75 && d <= 1.33)
-    val windowJson = s""","ext_p90":${r3(extP90)}""" +
-      duckDrift.map(d => s""","duck_drift":${r3(d)}""").getOrElse("") +
-      s""","clean_window":$cleanWindow"""
+    val windowJson =
+      adjudicate(extP90, cpus, if (duckRan) Some(duckTimes) else None, duckPrev).json
     // nq_timed vs nq_declared: the total is only comparable across
     // rounds when every declared query was timed — a run with failures
     // shrinks the total, and without these fields a shrunken run reads

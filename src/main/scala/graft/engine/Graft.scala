@@ -89,16 +89,6 @@ object Graft {
       // (≈ the reference's SystemFunctionBundle registration)
       .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
-    // Session-property overrides (≈ the reference's `SET SESSION x = y`
-    // surface, SystemSessionProperties.java): `SPARK_GRAFT_CONF` holds
-    // `key=value;key=value` pairs applied last, so a driver/operator can
-    // tune one session without a code change. Used by the perf probes.
-    sys.env.get("SPARK_GRAFT_CONF").foreach { s =>
-      s.split(';').iterator.map(_.trim).filter(_.contains('=')).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-      }
-    }
     graft.functions.GraftFunctions.registerUdfs(spark)
     spark
   }

@@ -112,8 +112,7 @@ object Dialect {
   // ---- compiled-regex cache ----------------------------------------
   // translate() chains ~20 passes, many of which used to compile their
   // patterns per CALL (`"...".r` is Pattern.compile every time) — the
-  // dominant share of the ~0.6 ms/query translate floor the Isolate
-  // pins kept hitting. Every `.r` in this file routes through this
+  // dominant share of the ~0.6 ms/query translate floor. Every `.r` in this file routes through this
   // process-wide cache; a nested object delays the map's own
   // initialization past the enclosing object's val-order.
   private object ReCache {

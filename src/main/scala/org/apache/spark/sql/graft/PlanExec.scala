@@ -1,45 +1,12 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.classic.{SparkSession => ClassicSparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 
-/** Minimal `private[sql]` bridge: re-plan an already-analyzed logical
-  * plan in a FRESH QueryExecution.
-  *
-  * Why it exists: repeated executions of the SAME `Dataset` reuse its
-  * finalized physical plan AND its shuffle outputs (the DAG scheduler
-  * sees the map stages as already computed), so a benchmark that
-  * re-materializes one Dataset measures only the final stage — not the
-  * query. Rebuilding from the analyzed plan instead gives each run a
-  * fresh physical plan, fresh shuffle ids, and a full re-execution,
-  * while skipping only parse + analysis (which a warm engine caches —
-  * the reference memoizes metadata/analysis per query shape the same
-  * way). Also the seam where graft's adaptive session confs (AQE,
-  * shuffle partitions) are re-read, since physical planning happens
-  * anew per call.
-  */
+/** Minimal `private[sql]` bridge: the few engine helpers that need
+  * Spark's classic session or catalyst expressions, which the public
+  * API keeps package-private. */
 object PlanExec {
-  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    ClassicDataset.ofRows(spark.asInstanceOf[ClassicSparkSession], plan)
-
-  /** Fresh execution of an ALREADY-OPTIMIZED logical plan: analysis
-    * and optimization are skipped (the plan is used as-is), while
-    * physical planning, codegen, shuffles, broadcasts, and every
-    * execution stage run anew — prepared-statement execution. The
-    * caller owns conf coherence: an optimized plan bakes in
-    * optimizer-time conf decisions (runtime-filter injection,
-    * constant folding of conf-dependent exprs), so it must be
-    * re-executed under the conf regime it was optimized under. */
-  def ofPreOptimized(spark: SparkSession, optimized: LogicalPlan): DataFrame = {
-    val cs = spark.asInstanceOf[ClassicSparkSession]
-    val qe = new org.apache.spark.sql.execution.QueryExecution(cs, optimized) {
-      override lazy val optimizedPlan: LogicalPlan = optimized
-    }
-    new ClassicDataset[org.apache.spark.sql.Row](qe,
-      org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(qe.analyzed.schema))
-  }
-
   /** BATCH execution of `transformWithState` loads per-partition state
     * stores, and store loading asks the driver for its
     * StateStoreCoordinator RPC endpoint — which is otherwise created

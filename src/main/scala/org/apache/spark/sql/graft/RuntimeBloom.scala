@@ -22,8 +22,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   *     in the per-row hot path) instead of a deserializing UDF;
   *   - the plan is self-contained: `might_contain(scalar-subquery(...),
   *     xxhash64(k))` shows up in EXPLAIN exactly like Spark's injected
-  *     runtime filters, so the prepared-plan bench protocol re-runs the
-  *     filter build per sample like every other stage.
+  *     runtime filters, so every execution re-runs the filter build
+  *     like every other stage.
   *
   * False positives only cost extra probe-side rows (callers must keep
   * an exact confirm step when exactness matters); there are no false

@@ -86,7 +86,7 @@ class SpillSpec extends AnyFunSuite with BeforeAndAfterAll {
     val prevMrCap = graft.operators.MatchRecognize.SpillAfterRows
     graft.operators.MatchRecognize.SpillAfterRows = 8
     try {
-      graft.engine.Adaptive.withConfs(spark, spillConfs) {
+      TestConfs.withConfs(spark, spillConfs) {
         for (name <- available) {
           val spilled = contentHash(SparkEntry.queries(name)(spark, sfDir))
           assert(spilled == baseline(name),
